@@ -15,37 +15,7 @@ Architecture (idiomatic Spark, NOT a port):
 - Per-superstep state snapshots + metrics go to a versioned table
   catalog (Iceberg in production; versioned parquet here) for lineage
   truncation and resume.
-- Python touches data only through Arrow-vectorized pandas UDFs.
+- Python touches data only through Arrow-vectorized UDFs.
 """
 
 __version__ = "0.1.0"
-
-# ---------------------------------------------------------------------------
-# Default sizing for the bench's diagnostic scaling probes (round 6).
-#
-# bench.py parameterises every probe through SPARK_GRAFT_* env knobs and
-# reads the ones below AFTER importing this package, so these are the
-# library's defaults for them; an explicitly-set environment variable
-# always wins (setdefault). Why they moved here: the driver re-runs the
-# frozen round-start bench.py under a hard measurement window, and the
-# round-5 run BLEW it — BENCH_r05.json records rc=124 (timeout) with no
-# parsed metric at all, the worst possible outcome. The headline timed
-# queries are untouched; only the diagnostic pair sizing is bounded:
-#
-# - standalone pair at 4M vertices (~26.8M edges), not 8M: the dedicated
-#   round-5 replications measured 0.806 N→4N efficiency at 26.8M edges
-#   (BASELINE.md), so the pair still sits on the amortized part of the
-#   curve at roughly half the wall-clock; the 53.7M-edge point remains
-#   documented by the committed dedicated-run artifacts
-#   (BENCH_local_r5d_scaling.json / BENCH_local_r5e_standalone.json).
-# - in-VM repeat budget 400 s, not 900: under co-tenant contention the
-#   budget is what bounds the relational/cogroup repeat sweeps. On a
-#   quiet host two full interleaved sweeps still run (min-of-2 for a
-#   diagnostic whose in-VM efficiency is quota-noise-dominated anyway);
-#   at 3x contention the whole bench then projects to ~3.2 ks, inside
-#   the driver's 3.6 ks window with margin.
-# ---------------------------------------------------------------------------
-import os as _os
-
-_os.environ.setdefault("SPARK_GRAFT_STANDALONE_VERTICES", "4000000")
-_os.environ.setdefault("SPARK_GRAFT_SCALING_BUDGET_S", "400")

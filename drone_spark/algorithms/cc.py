@@ -28,10 +28,10 @@ Two backends, same results:
   the *changed* labels routed to it via the partitioner's ``replicas``
   table (the Master./Mirror. analogue, graph.go:382-441) and runs
   **union-find to local fixpoint inside an Arrow batch**
-  (``applyInPandas``), then a global ``groupBy(vid).min`` combines
+  (``applyInArrow``), then a global ``groupBy(vid).min`` combines
   mirror candidates at masters. Supersteps drop from O(diameter) to
   O(log #partitions) — the reference's entire reason for existing
-  (CC.go:28-45), re-expressed as a grouped pandas kernel instead of
+  (CC.go:28-45), re-expressed as a grouped Arrow kernel instead of
   goroutines + gRPC.
 
 Both run under the checkpointing SuperstepEngine, so CC/LP inherit
@@ -161,19 +161,18 @@ def _seeded_minima(svid, slab, vids, comp):
     return out_v, out_l
 
 
-def _seeded_fixpoint_kernel(
-    key, seeds: pd.DataFrame, edges: pd.DataFrame, cache_token: str | None = None
-) -> pd.DataFrame:
+def _seeded_fixpoint_kernel_arrow(
+    key, seeds, edges, cache_token: str | None = None
+):
     """Vectorized component fixpoint over one partition's edges, seeded
-    with the labels that changed last superstep (pandas signature —
-    kept for the kernel unit tests; the Spark step uses the Arrow twin
-    below).
+    with the labels that changed last superstep (``applyInArrow``).
 
     Arrow hands us the partition's whole subgraph (the in-memory
     analogue of a DRONE worker's adjacency maps, graph.go:103-122) plus
-    only the *frontier* labels routed here via the replicas table. The
-    local fixpoint (reference's DFS flood, CC.go:28-45 — compiled Go
-    there) runs as numpy scatter-min label contraction
+    only the *frontier* labels routed here via the replicas table; both
+    stay pyarrow Tables and numpy views come straight off the Arrow
+    buffers. The local fixpoint (reference's DFS flood, CC.go:28-45 —
+    compiled Go there) runs as numpy scatter-min label contraction
     (graph/csr.local_components): no per-edge Python. Any vertex
     structurally connected to a seed adopts the minimum seeded label of
     its local component. Emits (vid, label) candidates for every local
@@ -188,38 +187,6 @@ def _seeded_fixpoint_kernel(
     contraction to O(V) label scatter, the same amortization a DRONE
     worker gets from holding adjacency in RAM.
     """
-    if seeds.empty:
-        return pd.DataFrame({"vid": pd.Series(dtype="int64"),
-                             "label": pd.Series(dtype="int64")})
-    import numpy as np
-
-    from ..graph.csr import part_cache_get_or_build
-
-    def build():
-        return _cc_structure(
-            edges["src"].to_numpy(np.int64), edges["dst"].to_numpy(np.int64)
-        )
-
-    if cache_token is not None and key is not None:
-        vids, comp = part_cache_get_or_build(
-            (cache_token, tuple(key)), len(edges), build
-        )
-    else:
-        vids, comp = build()
-    out_v, out_l = _seeded_minima(
-        seeds["vid"].to_numpy(np.int64), seeds["label"].to_numpy(np.int64),
-        vids, comp,
-    )
-    return pd.DataFrame({"vid": out_v, "label": out_l})
-
-
-def _seeded_fixpoint_kernel_arrow(
-    key, seeds, edges, cache_token: str | None = None
-):
-    """Arrow-native twin of :func:`_seeded_fixpoint_kernel` for
-    ``applyInArrow``: the (large) edge batch crossing the boundary every
-    superstep stays a pyarrow Table — numpy views come straight off the
-    Arrow buffers, no pandas block manager is built."""
     import numpy as np
     import pyarrow as pa
 
@@ -251,12 +218,12 @@ def _seeded_fixpoint_kernel_arrow(
 
 def _subgraph_step(
     spark: SparkSession, edges_p: DataFrame, routes: DataFrame,
-    cache_token: str | None = None,
+    cache_token: str,
 ):
     """edges_p: (src, dst, part) — vertex-cut partitioned, persisted.
     routes: (vid, rpart) — the partitioner's replicas table (every
     partition holding the vertex as master or mirror, J3 of SURVEY §2.3).
-    ``cache_token``: enables the executor-side structural cache (see
+    ``cache_token``: keys the executor-side structural cache (see
     kernel docstring)."""
 
     def kernel(key, seeds, edges):
@@ -301,7 +268,6 @@ def _run_labeling(
     salt_threshold: int = 1024,
     pre_partitioned: bool = False,
     assume_symmetric: bool = False,
-    use_kernel_cache: bool = True,
     warm_start: DataFrame | None = None,
 ) -> RunResult:
     """``pre_partitioned``: skips the per-run full-table shuffle — for
@@ -374,10 +340,8 @@ def _run_labeling(
         )
         routes.count()
         # unique per invocation: the executor cache can only ever serve
-        # this run's (immutable, persisted) partition edge sets.
-        # use_kernel_cache=False rebuilds per superstep (off-switch for
-        # memory-constrained executors; also the A/B baseline).
-        token = f"cc:{run_id}:{uuid.uuid4().hex}" if use_kernel_cache else None
+        # this run's (immutable, persisted) partition edge sets
+        token = f"cc:{run_id}:{uuid.uuid4().hex}"
         step = _subgraph_step(spark, edges_p, routes, cache_token=token)
         cleanup.extend([edges_p, routes])
         # init reads the CACHED partitioned table (same edge multiset:

@@ -16,7 +16,7 @@ table is cached twice — once hash-partitioned on src, once on dst —
 paying 2× edge memory so that neither pass re-shuffles edges per
 round; only the (vid, auth, hub) state moves. The single-copy
 alternative re-shuffles the full edge table on dst every superstep.
-Measured locally (tools/ab_hits_cache.py, 13.4M edges, 5 rounds,
+Measured locally (BASELINE.md round 3: 13.4M edges, 5 rounds,
 interleaved min-of-2): 1.04× — modest, because an in-memory exchange
 of 13M (long, long) rows is small next to HITS's two per-round state
 shuffles and norms. The dual cache is kept for the cluster-scale byte

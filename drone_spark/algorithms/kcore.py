@@ -21,7 +21,7 @@ endpoints) would re-shuffle the full edge table on ``dst`` every round
 frontier discipline of delta-PR/CC/SSSP. Measured (interleaved
 min-of-2, 13.4M-edge scaling graph, k=8, 22 rounds to the same
 812,988-vertex core): decrement 24.9 s vs recount 273.9 s — **11×**
-(tools/ab_kcore_formulation.py).
+(BASELINE.md round 3).
 """
 
 from __future__ import annotations
@@ -375,7 +375,7 @@ def onion_layers(
     twin (:func:`onion_layers_sql`) hash-matches exactly.
 
     Plan: the frontier-DECREMENT formulation k_core's A/B measured 11×
-    over recounting (tools/ab_kcore_formulation.py): the symmetric edge
+    over recounting (BASELINE.md round 3): the symmetric edge
     table is scanned only through the removed-set join (hash/broadcast
     on the small frontier — AQE picks), degrees update by subtraction,
     lineage is truncated with an eager localCheckpoint EVERY round

@@ -28,7 +28,6 @@ vertex-cut partitioner when running on catalog tables.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.superstep import RunResult, SuperstepEngine
@@ -43,7 +42,8 @@ def _scatter_side(df):
     slice is the build side (not a per-superstep broadcast, not a
     sort-merge re-sort of the cached edge table). Measured min-of-2 at
     13.4M edges / local[8] / 3 supersteps: 12.36 s (r5 shape) -> 8.62 s
-    with this hint + the join-back step (tools/ab_superstep.py)."""
+    with this hint + the join-back step (OPTIMIZATION_r06.md §Engine,
+    item 1)."""
     from ..engine.plan_hints import shj_build
 
     return shj_build(df)
@@ -118,8 +118,6 @@ def pagerank(
         )
 
     def step(state: DataFrame, _k: int) -> DataFrame:
-        import os
-
         scattered = (
             state.where(F.col("outdeg") > 0)
             .select("vid", (F.col("pr") / F.col("outdeg")).alias("w"))
@@ -129,44 +127,12 @@ def pagerank(
         new_pr = F.lit(1.0 - damping) + F.lit(damping) * F.coalesce(
             F.col("acc"), F.lit(0.0)
         )
-        if os.environ.get("SPARK_GRAFT_PR_STEP", "joinback") == "union":
-            # one-shuffle union-carrier apply: contribution rows and
-            # state-carrier rows combined in a single groupBy(vid)
-            contribs = scattered.select(
-                F.col("dst").alias("vid"),
-                F.col("w"),
-                F.lit(None).cast("double").alias("pr_old"),
-                F.lit(None).cast("long").alias("outdeg"),
-            )
-            carriers = state.select(
-                "vid",
-                F.lit(None).cast("double").alias("w"),
-                F.col("pr").alias("pr_old"),
-                "outdeg",
-            )
-            return (
-                contribs.unionByName(carriers)
-                .groupBy("vid")
-                .agg(
-                    F.sum("w").alias("acc"),
-                    F.first("pr_old", ignorenulls=True).alias("pr_old"),
-                    F.first("outdeg", ignorenulls=True).alias("outdeg"),
-                )
-                .select(
-                    "vid",
-                    new_pr.alias("pr"),
-                    "outdeg",
-                    F.abs(new_pr - F.col("pr_old")).alias("delta"),
-                )
-            )
-        # join-back shape (default): also exactly ONE exchange per
-        # superstep, but it carries only the partially-aggregated
-        # (dst, w) contributions — the union-carrier variant additionally
-        # ships every state row (4 columns wide) through the shuffle,
-        # which at 8M+ vertices is real shuffle tonnage (guide §2.3
-        # "shuffle fewer bytes"). The join back to state is exchange-free
-        # (both sides hash-partitioned on vid) and hash-builds the
-        # aggregated message side.
+        # join-back shape: ONE exchange per superstep, carrying only the
+        # partially-aggregated (dst, w) contributions; the join back to
+        # state is exchange-free (both sides hash-partitioned on vid)
+        # and hash-builds the aggregated message side. A union-carrier
+        # variant, which also ships every state row through the shuffle,
+        # measured slower (OPTIMIZATION_r06.md §Engine, item 1).
         msgs = scattered.groupBy(F.col("dst").alias("mvid")).agg(
             F.sum("w").alias("acc")
         )
@@ -224,8 +190,8 @@ def personalized_pagerank(
     sum is strictly below 1 on graphs with sinks. The tighter default
     ``tol`` stands because per-vertex mass is O(1/N), not O(1).
 
-    Plan shape is identical to :func:`pagerank` (union-carrier
-    one-shuffle step); the only change is the per-vertex ``base``
+    Plan shape is identical to :func:`pagerank` (join-back step, one
+    exchange per superstep); the only change is the per-vertex ``base``
     column the state carries, so every at-scale property (edge table
     shuffled once, map-side combine, frontier-free full scatter) holds
     unchanged.
@@ -338,7 +304,7 @@ def pagerank_weighted(
 
     Same at-scale shape as the uniform kernel: weighted edges are
     hash-partitioned on src once and cached; each superstep shuffles
-    only (vid, rank); the union-carrier apply keeps one exchange +
+    only (vid, rank); the join-back apply keeps one exchange +
     barrier per superstep; map-side partial sums combine the weighted
     contributions exactly like the unweighted ones.
 
@@ -553,7 +519,6 @@ def pagerank_cogroup(
     salt_threshold: int = 1024,
     pre_partitioned: bool = False,
     warm_start: DataFrame | None = None,
-    use_kernel_cache: bool = True,
 ) -> RunResult:
     """Subgraph-centric PageRank — the north-star execution shape.
 
@@ -619,7 +584,7 @@ def pagerank_cogroup(
     # hash-partitioned on vid and persisted: the per-superstep
     # state⋈routes join then shuffles only the small state side —
     # the routes exchange is paid once at prep, not per superstep.
-    # Measured neutral at bench scale (0.99x, tools/ab_cogroup_fusion.py)
+    # Measured neutral at bench scale (0.99x, BASELINE.md round 3)
     # where routes is tiny; at 100 TB routes is |V|·replication rows and
     # re-exchanging it 50+ times per run is real money.
     routes = (
@@ -653,7 +618,7 @@ def pagerank_cogroup(
     # within this run (persisted), so the CSR — its only structural
     # derivative — is built on the first superstep and reused by every
     # later one in the same Python worker (graph/csr.py cache notes).
-    cache_token = f"prcg:{run_id}:{uuid.uuid4().hex}" if use_kernel_cache else None
+    cache_token = f"prcg:{run_id}:{uuid.uuid4().hex}"
 
     def kernel(key, states, part_edges):
         # Arrow-native kernel (applyInArrow, Spark 4): the edge batch
@@ -672,13 +637,10 @@ def pagerank_cogroup(
                 {"dst": pa.array([], pa.int64()),
                  "partial": pa.array([], pa.float64())}
             )
-        if cache_token is not None:
-            ck = (cache_token, tuple(k.as_py() for k in key))
-            csr = part_cache_get_or_build(
-                ck, part_edges.num_rows, lambda: csr_from_arrow(part_edges)
-            )
-        else:
-            csr = csr_from_arrow(part_edges)
+        ck = (cache_token, tuple(k.as_py() for k in key))
+        csr = part_cache_get_or_build(
+            ck, part_edges.num_rows, lambda: csr_from_arrow(part_edges)
+        )
         values = np.zeros(len(csr.vids))
         idx = csr.local_index(_arrow_col_np(states, "vid", np.int64))
         ok = idx >= 0
@@ -691,12 +653,11 @@ def pagerank_cogroup(
         )
 
     def step(state: DataFrame, _k: int) -> DataFrame:
-        # groupBy(dst) pre-combine + join back to state. The relational
-        # backend's union-carrier one-shuffle fusion was A/B'd here too
-        # (tools/ab_cogroup_fusion.py) and measured 0.91x — SLOWER: the
-        # kernel already map-side-combines per partition, so the extra
-        # exchange the fusion removes is small, while widening every
-        # partial row with null carrier columns through the Arrow
+        # groupBy(dst) pre-combine + join back to state. A union-carrier
+        # one-shuffle fusion measured 0.91x here (BASELINE.md round 3) —
+        # SLOWER: the kernel already map-side-combines per partition, so
+        # the extra exchange the fusion removes is small, while widening
+        # every partial row with null carrier columns through the Arrow
         # boundary is not. Keep the two-step shape.
         routed = (
             state.where(F.col("outdeg") > 0)

@@ -33,61 +33,12 @@ reference's sink filter (SSSPworker.go:270).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..engine.superstep import RunResult, SuperstepEngine
 from ..graph.partitioner import partition_graph
 
 INF = float("inf")
-
-
-def _local_dijkstra_kernel(
-    key, seeds: pd.DataFrame, edges: pd.DataFrame, cache_token: str | None = None
-) -> pd.DataFrame:
-    """Heap Dijkstra over one partition's adjacency, started from the
-    frontier distances routed here — the Spark re-expression of the
-    reference's per-worker incremental Dijkstra (SSSP.go:21-44, 83-106:
-    ``container/heap`` over the in-RAM adjacency). Emits candidate
-    (vid, dist) for every locally-reached vertex; the global
-    ``groupBy(vid).min`` then applies the monotone-improvement filter
-    (SSSP.go:145-150)."""
-    if seeds.empty:
-        return pd.DataFrame(
-            {"vid": pd.Series(dtype="int64"), "dist": pd.Series(dtype="float64")}
-        )
-    import heapq
-
-    import numpy as np
-
-    from ..graph.csr import LocalCSR, part_cache_get_or_build
-
-    # adjacency as numpy CSR — one vectorized build (factorize + cumsum,
-    # graph/csr.py), replacing the former per-edge Python dict-append
-    # loop (VERDICT r2 item 1). The heap loop itself is inherent to
-    # Dijkstra (the reference uses container/heap, SSSP.go:21-44); each
-    # pop relaxes its whole out-neighborhood in numpy slices. With
-    # ``cache_token`` the CSR (pure function of the partition's
-    # immutable edge set) is cached in the worker process and reused
-    # across supersteps — the DRONE worker's in-RAM adjacency.
-    def build() -> LocalCSR:
-        srcs = edges["src"].to_numpy(np.int64)
-        dsts = edges["dst"].to_numpy(np.int64)
-        wts = (
-            edges["weight"].to_numpy(np.float64)
-            if "weight" in edges.columns
-            else np.ones(len(srcs), dtype=np.float64)
-        )
-        return LocalCSR.from_edges(srcs, dsts, weights=wts)
-
-    if cache_token is not None and key is not None:
-        csr = part_cache_get_or_build((cache_token, tuple(key)), len(edges), build)
-    else:
-        csr = build()
-    out_v, out_d = _dijkstra_core(
-        seeds["vid"].to_numpy(np.int64), seeds["dist"].to_numpy(np.float64), csr
-    )
-    return pd.DataFrame({"vid": out_v, "dist": out_d})
 
 
 def _dijkstra_core(svid, sdist, csr):
@@ -137,9 +88,21 @@ def _dijkstra_core(svid, sdist, csr):
 
 
 def _local_dijkstra_kernel_arrow(key, seeds, edges, cache_token=None):
-    """Arrow-native twin of :func:`_local_dijkstra_kernel` for
-    ``applyInArrow``: the per-superstep edge batch stays a pyarrow
-    Table — numpy views come straight off the Arrow buffers."""
+    """Heap Dijkstra over one partition's adjacency, started from the
+    frontier distances routed here (``applyInArrow``) — the Spark
+    re-expression of the reference's per-worker incremental Dijkstra
+    (SSSP.go:21-44, 83-106: ``container/heap`` over the in-RAM
+    adjacency). Emits candidate (vid, dist) for every locally-reached
+    vertex; the global ``groupBy(vid).min`` then applies the
+    monotone-improvement filter (SSSP.go:145-150).
+
+    The per-superstep edge batch stays a pyarrow Table — numpy views
+    come straight off the Arrow buffers. The adjacency is a numpy CSR
+    (graph/csr.LocalCSR, one vectorized build); the heap loop itself is
+    inherent to Dijkstra, and each pop relaxes its whole out-neighborhood
+    in numpy slices. With ``cache_token`` the CSR (a pure function of the
+    partition's immutable edge set) is cached in the worker process and
+    reused across supersteps — the DRONE worker's in-RAM adjacency."""
     import numpy as np
     import pyarrow as pa
 
@@ -184,7 +147,6 @@ def sssp(
     num_parts: int | None = None,
     salt_threshold: int = 1024,
     pre_partitioned: bool = False,
-    use_kernel_cache: bool = True,
     warm_start: DataFrame | None = None,
 ) -> RunResult:
     """State: (vid, dist, outdeg, delta); delta>0 marks the current frontier.
@@ -269,7 +231,7 @@ def sssp(
         )
         routes.count()
         cleanup.extend([edges_p, routes])
-        token = f"sssp:{run_id}:{uuid.uuid4().hex}" if use_kernel_cache else None
+        token = f"sssp:{run_id}:{uuid.uuid4().hex}"
 
         def kernel(key, seeds, part_edges):
             return _local_dijkstra_kernel_arrow(key, seeds, part_edges, token)

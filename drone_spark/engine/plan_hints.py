@@ -1,4 +1,4 @@
-"""Join-strategy hints for the superstep hot paths (round 6).
+"""Join-strategy hints for the superstep hot paths.
 
 Iterative state lives in localCheckpoint RDDs / fresh parquet commits,
 whose plans carry no usable size statistics — so Catalyst's size-based
@@ -10,16 +10,12 @@ state slice). Both sides of these joins are already co-partitioned on
 the join key, so strategy is the only degree of freedom — an explicit
 SHUFFLE_HASH hint on the small side pins it.
 
-Measured (tools/ab_superstep.py, 13.4M edges, local[8], 3 supersteps,
-min-of-2): r5 shape 12.36 s → 8.62 s iteration with the hint + join-back
-step shape.
-
-``SPARK_GRAFT_SCATTER_HINT=none`` restores planner choice for A/B.
+Measured (13.4M edges, local[8], 3 supersteps, min-of-2): r5 shape
+12.36 s → 8.62 s iteration with the hint + join-back step shape
+(OPTIMIZATION_r06.md §Engine, item 1).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
@@ -31,6 +27,4 @@ def shj_build(df: DataFrame) -> DataFrame:
     slices (|V|/num_parts rows) or aggregated message tables (≤ that).
     Scale-safe: the build side is bounded per partition and num_parts
     scales with the cluster."""
-    if os.environ.get("SPARK_GRAFT_SCATTER_HINT", "shj") == "shj":
-        return df.hint("shuffle_hash")
-    return df
+    return df.hint("shuffle_hash")

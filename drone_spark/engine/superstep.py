@@ -13,37 +13,43 @@ What Spark does *not* give us and this engine adds (SURVEY.md §4.3):
 - **fixpoint loop** — driven here, termination on the algorithm's
   ``pending`` aggregate (the analogue of the master ORing workers'
   ``MessageToSend`` flags, master.go:267-271);
-- **lineage truncation** — every superstep's state is committed to the
-  catalog and *read back*, so the logical plan stays O(1) deep instead
-  of growing by one join+agg per iteration (without this, iteration 50
-  at 100 TB would re-derive 50 shuffles of lineage on any retry);
+- **lineage truncation** — every superstep's state is materialized once
+  and the next plan starts from it, so the logical plan stays O(1) deep
+  instead of growing by one join+agg per iteration;
 - **resume** — a killed run restarts from its last committed snapshot
   (north_rule); commit metadata carries the superstep number;
-- **per-partition metrics** — per superstep, per master-partition row
-  counts / changed counts / max delta recorded in a metrics table, plus
-  wall-clock and edge-traversal throughput (the reference logs the same
-  per-worker numbers through FinishRequest,
-  master_service.proto:33-55).
+- **metrics** — one set of counters per superstep (vertex count, changed
+  count, max delta, traversed edges, phase seconds), the same numbers
+  the reference's master takes from every worker in FinishRequest
+  (master_service.proto:33-55).
 
-Cost model per superstep: the state materialization (parquet snapshot
-at checkpoints, eager in-memory truncation between) plus one tiny
-aggregation over the materialized state that returns ≤num_parts rows —
-the per-partition metrics AND the global convergence max in a single
-scan (piggy-backing the per-part aggregates onto the write action as
-``Observation`` expressions was measured ~6.5 s/superstep slower: a
-CollectMetrics node with ~100 conditional aggregates sits on the hot
-path of the step plan, while the separate scan reads already-
-materialized state). Metric rows buffer on the driver and are appended
-to the metrics table at every full checkpoint (and at run end), keeping
-the metrics table consistent with the resume points: on resume, rows
+One commit path (:meth:`SuperstepEngine._commit`): each superstep
+materializes once — a parquet snapshot at full commits (every
+``checkpoint_every``-th superstep, the resume points) and an eager
+``localCheckpoint`` between them. The metric aggregates come from one of
+two places, chosen by ``checkpoint_every`` alone:
+
+- ``checkpoint_every == 1`` (snapshot every superstep, the
+  metrics-fidelity mode): a scan of the committed state grouped by
+  master partition, one row per partition — a second small job;
+- ``checkpoint_every > 1`` (the throughput mode): four global aggregates
+  observed inside the materialization job itself (``DataFrame.observe``),
+  one row with ``part = -1`` — no extra job or stage.
+
+Either way the rows go through the same bookkeeping
+(:meth:`SuperstepEngine._record`): frontier shift, traversed totals,
+commit meta and the resume row. A superstep's rows sum to the same
+``n_vertices`` and ``edges_traversed`` at every cadence, and those sums
+match ``RunResult.history``. Metric rows buffer on the driver and are
+appended to the metrics table at every full commit (and at run end),
+keeping the table consistent with the resume points: on resume, rows
 beyond the resumed superstep are truncated and the resume-point row is
 recomputed from the loaded state, so a crash between the state commit
-and the metrics append can neither double-count nor permanently lose
-the resume superstep's row.
+and the metrics append can neither double-count nor lose a row.
 
 State contract: a DataFrame with a long ``vid`` column, a double
 ``delta`` column (per-vertex change this superstep; drives convergence
-and per-partition metrics), and any algorithm columns.
+and the metrics), and any algorithm columns.
 """
 
 from __future__ import annotations
@@ -52,7 +58,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..catalog import Catalog
 
@@ -81,31 +87,10 @@ class SuperstepEngine:
         num_parts: int = 32,
         checkpoint_every: int = 1,
     ) -> None:
-        import os
-
         self.spark = spark
         self.catalog = catalog
         self.num_parts = num_parts
         self.checkpoint_every = checkpoint_every
-        # Metrics granularity (round 6). Per-master-partition metric rows
-        # need a scan of the materialized state — a 2-stage driver job on
-        # top of every superstep, measured ~0.25 s/superstep at bench
-        # scale and a full O(|V|) extra pass at cluster scale. At
-        # snapshot-every-superstep cadence (checkpoint_every=1 — the
-        # metrics-fidelity / resume-bit-identity mode) that detail is the
-        # point and is kept. At sparse cadence — the throughput mode —
-        # per-superstep metrics become ONE GLOBAL row (part = -1)
-        # computed by CollectMetrics (DataFrame.observe) INSIDE the state
-        # materialization job: zero extra stages, zero extra driver jobs
-        # (guide §1.4 note on count vs noop / §2.4 remove work outright).
-        # Per-superstep sums/maxima — the convergence trace, n_changed
-        # decay, real traversed-edge counters — are identical; only the
-        # per-partition split is coarsened. SPARK_GRAFT_PART_METRICS=1
-        # forces per-part rows at any cadence for A/B.
-        self._global_metrics = (
-            checkpoint_every > 1
-            and os.environ.get("SPARK_GRAFT_PART_METRICS") != "1"
-        )
         self._pending_metrics: list[tuple] = []
 
     # table names ----------------------------------------------------------
@@ -135,41 +120,40 @@ class SuperstepEngine:
         """Iterate ``state = step(state, k)`` until ``max(delta) <= tol``.
 
         ``init`` builds superstep-0 state; both callables return plans,
-        the engine materializes them via catalog commits. With
-        ``resume=True`` and a prior checkpoint for ``run_id``, the loop
-        continues from the last committed superstep instead of
-        restarting.
+        the engine materializes them. With ``resume=True`` and a prior
+        checkpoint for ``run_id``, the loop continues from the last
+        committed superstep instead of restarting.
 
         ``checkpoint_every`` (constructor): full catalog commits — the
         resume points — happen every Nth superstep; in between, lineage
-        is truncated in-memory (``localCheckpoint``) and metric rows
+        is truncated in memory (``localCheckpoint``) and metric rows
         buffer on the driver. N=1 (default) is the strict
-        snapshot-every-superstep mode; the final converged state is
-        always fully committed either way.
+        snapshot-every-superstep mode; the final state is always fully
+        committed either way.
 
         ``traversed_expr``: a Column over state rows giving the number
         of edges that row will scatter across in the NEXT superstep
         (the algorithm's own frontier predicate × its out-degree, e.g.
         ``F.when(F.col("delta") > 0, F.col("outdeg")).otherwise(0)``).
-        The engine sums it per master partition inside the existing
-        metrics scan and records it — shifted one superstep — as the
-        ``edges_traversed`` metric column: row k reports the edges
-        actually traversed *during* step k, i.e. the frontier of state
-        k-1. This is the reference's real per-superstep traversal
-        counter (kernel counters PageRank.go:29,78 / CC.go:29,
-        accumulated master.go:285,:407) — without it, frontier
-        algorithms would overstate late-superstep work by orders of
-        magnitude (VERDICT r2 missing #1). ``None`` falls back to the
-        static ``edges_per_step`` upper bound in every row.
+        The engine sums it alongside the other metric aggregates and
+        records it — shifted one superstep — as the ``edges_traversed``
+        metric: row k reports the edges actually traversed *during*
+        step k, i.e. the frontier of state k-1. This is the reference's
+        per-superstep traversal counter (kernel counters
+        PageRank.go:29,78 / CC.go:29, accumulated master.go:285,:407).
+        ``None`` falls back to the static ``edges_per_step`` upper bound
+        for every superstep after init. Superstep 0 traverses nothing.
         """
         cat, spark = self.catalog, self.spark
         state_table = self._state_table(run_id)
         resumed_from: int | None = None
+        self._edges_per_step = edges_per_step
+        self._traversed_expr = traversed_expr
         self._pending_metrics = []
-        # per-part frontier-edge counts from the previous scan = edges
-        # traversed during the step now being computed ({} → 0: nothing
-        # is traversed while materializing init)
+        # per-row-key frontier edges of the last recorded state = what
+        # the next superstep traverses ({} → 0: init traverses nothing)
         self._prev_frontier: dict[int, int] = {}
+        self._row_frontier: dict[int, int] = {}
         self._traversed_total = 0
 
         if resume and cat.exists(state_table):
@@ -177,17 +161,14 @@ class SuperstepEngine:
             meta = cat.commit_meta(state_table, version)
             k = int(meta["superstep"])
             state = cat.read(spark, state_table)
-            pending = self._resume_metrics(
-                run_id, state, k, version, edges_per_step, traversed_expr, meta
-            )
+            pending = self._resume_metrics(run_id, state, k, version, meta)
             resumed_from = k
         else:
             cat.drop(state_table)
             cat.drop(self._metrics_table(run_id))
             k = 0
-            t0 = time.monotonic()
             state, pending = self._commit(
-                run_id, init(), k, t0, edges_per_step, traversed_expr, full=True
+                run_id, init(), k, time.monotonic(), full=True
             )
 
         t_start = time.monotonic()
@@ -200,8 +181,7 @@ class SuperstepEngine:
             last_full = k % self.checkpoint_every == 0
             before = self._traversed_total
             state, pending = self._commit(
-                run_id, step(state, k), k, t0, edges_per_step, traversed_expr,
-                full=last_full,
+                run_id, step(state, k), k, t0, full=last_full
             )
             history.append({
                 "superstep": k, "max_delta": pending,
@@ -210,8 +190,7 @@ class SuperstepEngine:
             converged = pending <= tol
         if not last_full:  # converged/stopped between commits: persist final state
             cat.write_snapshot(
-                state, state_table,
-                meta={"superstep": k, "traversed": self._meta_frontier()},
+                state, state_table, meta=self._commit_meta(k, self._row_frontier)
             )
             state = cat.read(spark, state_table)
         self._flush_metrics(run_id)
@@ -226,84 +205,133 @@ class SuperstepEngine:
             edges_traversed_total=self._traversed_total,
         )
 
-    # checkpoint + metrics ---------------------------------------------------
-    def _part_col(self):
-        return F.pmod(F.xxhash64("vid"), F.lit(self.num_parts)).cast("int")
+    # commit + metrics -------------------------------------------------------
+    def _commit(
+        self,
+        run_id: str,
+        new_state: DataFrame,
+        superstep: int,
+        t0: float,
+        full: bool = True,
+    ) -> tuple[DataFrame, float]:
+        """Materialize one superstep exactly once and record its metrics.
 
-    def _meta_frontier(self) -> dict[str, int] | None:
-        """The per-part traversed counts recorded in the latest metric
-        rows — persisted in commit meta so a resume can rebuild the
-        resume superstep's ``edges_traversed`` exactly."""
-        row = getattr(self, "_row_frontier", None)
-        return {str(p): int(v) for p, v in row.items()} if row is not None else None
+        ``full`` commits write a parquet snapshot (a resume point) and
+        read it back; between them the state is truncated in memory with
+        an eager ``localCheckpoint``. Returning the materialized state is
+        the lineage truncation: the next superstep's plan starts from it,
+        not from the iteration history.
 
-    def _collect_part_metrics(
-        self, committed: DataFrame, superstep: int, write_seconds: float,
-        version: int, edges_per_step: int | None, traversed_expr=None,
-        traversed_override: dict[int, int] | None = None,
-    ) -> float:
-        """Per-master-partition counts from the *materialized* state —
-        a tiny second aggregation over the committed parquet / cached
-        localCheckpoint (codegen HashAggregate, ≤num_parts result rows).
+        At ``checkpoint_every > 1`` the metric aggregates ride the
+        materialization job as observed metrics, adding no job or stage.
+        At ``checkpoint_every == 1`` a per-partition scan of the
+        committed snapshot follows the write (≤num_parts rows back to
+        the driver). Metric rows flush to the metrics table as one
+        coalesced append per full commit.
 
-        Deliberately NOT piggy-backed on the state write: a
-        CollectMetrics node with num_parts×3 conditional aggregates on
-        top of the step's own aggregation measured ~6.5 s/superstep
-        extra (observed r2), while this separate scan of the already-
-        materialized state costs ~0.1-0.3 s.
+        Phase split (reference FinishRequest parity,
+        master_service.proto:33-55): ``write_seconds`` = step plan
+        execution + state materialization (one action — Spark computes
+        the plan inside the write); ``metrics_seconds`` = reading the
+        metric aggregates (the scan, or fetching the observed values);
+        ``seconds`` = their sum."""
+        cat = self.catalog
+        state_table = self._state_table(run_id)
+        obs = None
+        if self.checkpoint_every > 1:
+            obs = Observation()
+            new_state = new_state.observe(obs, *self._metric_aggs())
+        if full:
+            version = cat.write_snapshot(
+                new_state, state_table,
+                meta=self._commit_meta(superstep, self._prev_frontier),
+            )
+            committed = cat.read(self.spark, state_table)
+        else:
+            version = -1  # not a resume point
+            committed = new_state.localCheckpoint(eager=True)
+        write_seconds = time.monotonic() - t0
+        t_m0 = time.monotonic()
+        if obs is not None:
+            vals = obs.get  # complete: the materialization job ran
+            rows = [(-1, vals["n"], vals["c"], vals["d"], vals.get("t"))]
+        else:
+            rows = self._scan_metrics(committed)
+        max_delta = self._record(
+            superstep, rows, write_seconds, time.monotonic() - t_m0, version
+        )
+        if full:
+            self._flush_metrics(run_id)
+        return committed, max_delta
 
-        With ``traversed_expr`` the same scan also sums the NEXT
-        superstep's per-part frontier-edge counts (zero extra jobs: one
-        more aggregate column in the existing HashAggregate); the rows
-        appended HERE use the counts captured by the PREVIOUS scan —
-        the frontier that actually scattered during this superstep."""
+    def _metric_aggs(self) -> list:
         aggs = [
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("delta") > 0).cast("long")).alias("c"),
             F.max("delta").alias("d"),
         ]
-        if traversed_expr is not None:
-            aggs.append(F.sum(traversed_expr.cast("long")).alias("t"))
-        t_m0 = time.monotonic()
-        rows = (
-            committed.groupBy(self._part_col().alias("part"))
-            .agg(*aggs)
-            .collect()
+        if self._traversed_expr is not None:
+            aggs.append(F.sum(self._traversed_expr.cast("long")).alias("t"))
+        return aggs
+
+    def _scan_metrics(self, state: DataFrame) -> list[tuple]:
+        """(part, n, c, d, t) aggregates from a materialized state: one
+        row per master partition at ``checkpoint_every == 1``, else one
+        global row (part = -1)."""
+        part = (
+            F.pmod(F.xxhash64("vid"), F.lit(self.num_parts)).cast("int")
+            if self.checkpoint_every == 1 else F.lit(-1)
         )
-        metrics_seconds = time.monotonic() - t_m0
-        seconds = write_seconds + metrics_seconds
-        if traversed_expr is not None:
-            row_frontier = (
-                traversed_override if traversed_override is not None
-                else self._prev_frontier
-            )
-        else:
-            row_frontier = None
-        used: dict[int, int] = {}
-        for r in rows:
-            part = int(r["part"])
-            if row_frontier is not None:
-                edges_val = int(row_frontier.get(part, 0))
+        scan = state.groupBy(part.alias("part")).agg(*self._metric_aggs())
+        return [
+            (r["part"], r["n"], r["c"], r["d"], r.asDict().get("t"))
+            for r in scan.collect()
+        ]
+
+    def _record(
+        self, superstep: int, rows: list[tuple], write_seconds: float,
+        metrics_seconds: float, version: int,
+        frontier: dict[int, int] | None = None,
+    ) -> float:
+        """Buffer one superstep's metric rows and advance the traversal
+        bookkeeping; returns the max delta (the convergence value).
+
+        ``edges_traversed`` of row k is the edges traversed during step
+        k: with ``traversed_expr``, the frontier summed over state k-1
+        (``frontier`` overrides it at resume, from commit meta); without
+        it, the static ``edges_per_step`` bound, spread evenly over the
+        superstep's rows so that they sum to it. Either way superstep 0
+        records 0, and a superstep's rows sum to its history entry."""
+        if self._traversed_expr is not None:
+            frontier = self._prev_frontier if frontier is None else frontier
+            if len(rows) == 1 and rows[0][0] == -1:
+                edges = [sum(frontier.values())]
             else:
-                edges_val = int(edges_per_step or 0)
-            used[part] = edges_val
-            self._pending_metrics.append(
-                (
-                    superstep, part, int(r["n"]), int(r["c"] or 0),
-                    float(r["d"] or 0.0), seconds, write_seconds,
-                    metrics_seconds, version, edges_val,
-                )
-            )
-        if traversed_expr is not None:
-            self._row_frontier = used
-            self._traversed_total += sum(used.values())
-            self._prev_frontier = {int(r["part"]): int(r["t"] or 0) for r in rows}
+                edges = [int(frontier.get(int(r[0]), 0)) for r in rows]
+            self._row_frontier = frontier
+            self._prev_frontier = {int(r[0]): int(r[4] or 0) for r in rows}
         else:
-            self._row_frontier = None
-            if superstep > 0 or traversed_override is not None:
-                self._traversed_total += int(edges_per_step or 0)
-        # global convergence value falls out of the same ≤num_parts rows
-        return max((float(r["d"] or 0.0) for r in rows), default=0.0)
+            total = int(self._edges_per_step or 0) if superstep > 0 else 0
+            q, extra = divmod(total, max(len(rows), 1))
+            edges = [q + (i < extra) for i in range(len(rows))]
+        self._traversed_total += sum(edges)
+        seconds = write_seconds + metrics_seconds
+        for (part, n, c, d, _), e in zip(rows, edges):
+            self._pending_metrics.append((
+                superstep, int(part), int(n or 0), int(c or 0),
+                float(d or 0.0), seconds, write_seconds, metrics_seconds,
+                version, e,
+            ))
+        return max((float(r[3] or 0.0) for r in rows), default=0.0)
+
+    def _commit_meta(self, superstep: int, frontier: dict[int, int]) -> dict:
+        """Snapshot meta: the superstep, plus the per-row-key edges its
+        metric rows record — so a resume can rebuild that row exactly."""
+        traversed = (
+            {str(p): int(v) for p, v in frontier.items()}
+            if self._traversed_expr is not None else None
+        )
+        return {"superstep": superstep, "traversed": traversed}
 
     def _flush_metrics(self, run_id: str) -> None:
         if not self._pending_metrics:
@@ -333,210 +361,29 @@ class SuperstepEngine:
         self.catalog.append(df.coalesce(1), self._metrics_table(run_id))
         self._pending_metrics = []
 
-    @staticmethod
-    def _metric_aggs(traversed_expr):
-        aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("delta") > 0).cast("long")).alias("c"),
-            F.max("delta").alias("d"),
-        ]
-        if traversed_expr is not None:
-            aggs.append(F.sum(traversed_expr.cast("long")).alias("t"))
-        return aggs
-
-    def _record_global_row(
-        self, superstep: int, vals, write_seconds: float,
-        metrics_seconds: float, version: int, edges_per_step: int | None,
-        traversed_expr=None, traversed_override: int | None = None,
-    ) -> float:
-        """Append the ONE global metric row (part = -1) for a superstep
-        from observed/aggregated (n, c, d, t) values; maintain the same
-        frontier bookkeeping the per-part scan does, collapsed to the
-        global total. Returns the max delta (the convergence value)."""
-        max_delta = float(vals["d"] if vals["d"] is not None else 0.0)
-        if traversed_expr is not None:
-            edges_val = (
-                traversed_override if traversed_override is not None
-                else int(sum(self._prev_frontier.values()))
-            )
-        else:
-            edges_val = int(edges_per_step or 0) if superstep > 0 else 0
-        self._pending_metrics.append(
-            (
-                superstep, -1, int(vals["n"] or 0), int(vals["c"] or 0),
-                max_delta, write_seconds + metrics_seconds, write_seconds,
-                metrics_seconds, version, edges_val,
-            )
-        )
-        if traversed_expr is not None:
-            self._row_frontier = {-1: edges_val}
-            self._traversed_total += edges_val
-            self._prev_frontier = {-1: int(vals["t"] or 0)}
-        else:
-            self._row_frontier = None
-            if superstep > 0 or traversed_override is not None:
-                self._traversed_total += int(edges_per_step or 0)
-        return max_delta
-
-    def _commit_observed(
-        self,
-        run_id: str,
-        new_state: DataFrame,
-        superstep: int,
-        t0: float,
-        edges_per_step: int | None,
-        traversed_expr=None,
-        full: bool = True,
-    ) -> tuple[DataFrame, float]:
-        """Sparse-cadence commit: the global metric aggregates ride the
-        state materialization job as a CollectMetrics (observe) node —
-        the per-superstep cost is exactly ONE Spark job with no extra
-        stage and no separate driver scan. ``full`` commits observe the
-        parquet write itself; between checkpoints the observation rides
-        the eager localCheckpoint."""
-        from pyspark.sql import Observation
-
-        cat, spark = self.catalog, self.spark
-        state_table = self._state_table(run_id)
-        obs = Observation()
-        observed = new_state.observe(obs, *self._metric_aggs(traversed_expr))
-        if full:
-            version = cat.write_snapshot(
-                observed, state_table,
-                meta={"superstep": superstep,
-                      "traversed": self._meta_prev_frontier(traversed_expr)},
-            )
-            committed = cat.read(spark, state_table)
-        else:
-            version = -1
-            committed = observed.localCheckpoint(eager=True)
-        write_seconds = time.monotonic() - t0
-        t_m0 = time.monotonic()
-        vals = obs.get  # already complete: the materialization job ran
-        metrics_seconds = time.monotonic() - t_m0
-        max_delta = self._record_global_row(
-            superstep, vals, write_seconds, metrics_seconds, version,
-            edges_per_step, traversed_expr,
-        )
-        if full:
-            self._flush_metrics(run_id)
-        return committed, max_delta
-
-    def _meta_prev_frontier(self, traversed_expr):
-        if traversed_expr is None:
-            return None
-        return {str(p): int(v) for p, v in self._prev_frontier.items()}
-
     def _resume_metrics(
-        self, run_id: str, state: DataFrame, k: int, version: int,
-        edges_per_step: int | None, traversed_expr=None,
-        meta: dict | None = None,
+        self, run_id: str, state: DataFrame, k: int, version: int, meta: dict,
     ) -> float:
         """Make the metrics table idempotent across resumes: drop any
         rows from supersteps beyond the resume point (a prior run may
         have buffered/flushed further than the snapshot we resume from),
-        then recompute the resume superstep's per-partition row from the
-        loaded state — covering a crash that landed between the state
-        commit and the metrics flush. The row's ``edges_traversed``
-        comes from the snapshot's commit meta (recorded at write time);
-        the same scan re-derives the NEXT superstep's frontier counts
-        from the loaded state. Returns the state's max delta."""
+        then recompute the resume superstep's row(s) from the loaded
+        state — covering a crash that landed between the state commit
+        and the metrics flush. The rows' ``edges_traversed`` comes from
+        the snapshot's commit meta; the same scan re-derives the next
+        superstep's frontier from the loaded state. Returns the state's
+        max delta."""
         cat, spark = self.catalog, self.spark
         mtable = self._metrics_table(run_id)
         if cat.exists(mtable):
             kept = cat.read(spark, mtable).where(F.col("superstep") < k)
             cat.write_snapshot(kept.coalesce(1), mtable, meta={"truncated_to": k})
-        stored = (meta or {}).get("traversed")
-        if self._global_metrics:
-            # one aggregation over the loaded state rebuilds the global
-            # resume row + the next frontier total (once per resume)
-            t_m0 = time.monotonic()
-            vals = state.agg(*self._metric_aggs(traversed_expr)).collect()[0]
-            metrics_seconds = time.monotonic() - t_m0
-            pending = self._record_global_row(
-                k, vals, 0.0, metrics_seconds, version, edges_per_step,
-                traversed_expr,
-                traversed_override=(
-                    sum(int(v) for v in stored.values()) if stored else 0
-                ) if traversed_expr is not None else None,
-            )
-            self._flush_metrics(run_id)
-            return pending
-        override = (
-            {int(p): int(v) for p, v in stored.items()} if stored else {}
-        )
-        pending = self._collect_part_metrics(
-            state, k, 0.0, version, edges_per_step, traversed_expr,
-            traversed_override=override if traversed_expr is not None else None,
+        stored = meta.get("traversed") or {}
+        t_m0 = time.monotonic()
+        rows = self._scan_metrics(state)
+        pending = self._record(
+            k, rows, 0.0, time.monotonic() - t_m0, version,
+            frontier={int(p): int(v) for p, v in stored.items()},
         )
         self._flush_metrics(run_id)
         return pending
-
-    def _commit(
-        self,
-        run_id: str,
-        new_state: DataFrame,
-        superstep: int,
-        t0: float,
-        edges_per_step: int | None,
-        traversed_expr=None,
-        full: bool = True,
-    ) -> tuple[DataFrame, float]:
-        """Materialize one superstep exactly once and record metrics.
-
-        Two Spark actions per superstep: (1) the state materialization —
-        parquet snapshot when ``full``, in-memory eager
-        ``localCheckpoint`` between checkpoints; (2) a tiny per-partition
-        aggregation over the *materialized* state (≤num_parts rows back
-        to the driver) that yields both the metric rows and the global
-        convergence max. Metric rows buffer on the driver and flush to
-        the metrics table as one coalesced append per ``full`` commit —
-        no per-superstep metrics write.
-
-        Phase split (reference FinishRequest parity,
-        master_service.proto:33-55): ``write_seconds`` = step plan
-        execution + state materialization (one action — Spark computes
-        the plan inside the write, so they are not separable without
-        doing the work twice); ``metrics_seconds`` = the metrics scan;
-        ``seconds`` = their sum, the full per-superstep cost."""
-        cat, spark = self.catalog, self.spark
-        state_table = self._state_table(run_id)
-
-        if self._global_metrics:
-            return self._commit_observed(
-                run_id, new_state, superstep, t0, edges_per_step,
-                traversed_expr, full,
-            )
-
-        if full:
-            version = cat.write_snapshot(
-                new_state, state_table,
-                meta={"superstep": superstep,
-                      "traversed": {str(p): int(v)
-                                    for p, v in self._prev_frontier.items()}
-                      if traversed_expr is not None else None},
-            )
-            committed = cat.read(spark, state_table)
-        else:
-            version = -1  # not a resume point
-            # non-eager: the metrics scan right below is the action that
-            # materializes (and caches) the checkpoint RDD — ONE Spark
-            # job per superstep instead of two (materialize + scan). The
-            # RDD computes every column regardless of what the metrics
-            # aggregation reads, so the committed state is identical;
-            # measured ~0.2 s/superstep at bench scale.
-            # SPARK_GRAFT_EAGER_LC=1 restores the two-job split for A/B.
-            import os
-
-            eager = os.environ.get("SPARK_GRAFT_EAGER_LC") == "1"
-            committed = new_state.localCheckpoint(eager=eager)
-        write_seconds = time.monotonic() - t0
-        max_delta = self._collect_part_metrics(
-            committed, superstep, write_seconds, version, edges_per_step,
-            traversed_expr,
-        )
-        if full:
-            self._flush_metrics(run_id)
-        # returning the committed scan = lineage truncation: the next
-        # superstep's plan starts from parquet, not the iteration history.
-        return committed, max_delta

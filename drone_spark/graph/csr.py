@@ -2,8 +2,8 @@
 
 A DRONE worker holds its partition's adjacency as in-RAM hash maps
 (/root/reference/src/graph/graph.go:103-122). Our equivalent: inside a
-``cogroup(...).applyInPandas`` kernel, the partition's edges arrive as
-one Arrow batch; these helpers turn that batch into a numpy CSR
+``cogroup(...).applyInArrow`` kernel, the partition's edges arrive as
+one Arrow table; these helpers turn that batch into a numpy CSR
 (indptr/indices over a local vertex dictionary) so per-superstep
 gather/scatter is pure vectorized numpy — no Python per row, no JVM
 round trips inside the kernel.
@@ -118,12 +118,6 @@ class LocalCSR:
         counts = np.diff(self.indptr)
         per_edge = np.repeat(values, counts)
         return np.bincount(self.indices, weights=per_edge, minlength=len(self.vids))
-
-
-def csr_from_pandas(edges: pd.DataFrame) -> LocalCSR:
-    return LocalCSR.from_edges(
-        edges["src"].to_numpy(np.int64), edges["dst"].to_numpy(np.int64)
-    )
 
 
 def local_components(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:

@@ -70,19 +70,20 @@ def range_rank(
     total order — ties across rows would make ranks depend on the
     range boundary placement, so the caller must include a tiebreaker.
 
-    The range exchange is persisted for the DataFrame's lifetime: the
-    offsets are computed from one materialization of the sampled range
-    boundaries, and the returned plan must reuse exactly that
-    partitioning (re-sampling in a second job could move boundary
-    rows). The cache is one projected copy of ``df`` — unpersist it by
-    dropping the returned DataFrame.
+    The range exchange is local-checkpointed: the counts job
+    materializes it once, and the returned plan reads exactly those
+    blocks, so offsets and rows share one sampling of the range
+    boundaries (re-sampling in a second job could move boundary rows).
+    The blocks have no lineage — losing one fails the query instead of
+    silently re-sampling — and nothing is registered in the session's
+    cache, so no copy outlives the returned DataFrame.
     """
     spark = df.sparkSession
     n_parts = n_parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
     parted = (
         df.repartitionByRange(n_parts, *order_cols)
         .withColumn("_rr_pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=False)
     )
     counts = {
         r["_rr_pid"]: r["cnt"]

@@ -13,7 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+# the directory holding the drone_spark package: Python workers must be
+# able to import it even when the driver found it only through sys.path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -30,20 +34,19 @@ def get_spark(
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cores
-    # AQE is right for ad-hoc analytics (skew splitting, runtime
-    # coalescing) but re-optimizes every shuffle stage on the DRIVER —
-    # in a superstep loop whose plan shape never changes that's pure
-    # per-superstep serial cost, the term executor scaling can't touch
-    # (BASELINE.md r4: ~2.7 s/superstep fixed). SPARK_GRAFT_AQE=0 lets
-    # the fixed-shape iterative jobs opt out; default stays on.
-    aqe = "false" if os.environ.get("SPARK_GRAFT_AQE", "1") in ("0", "false") else "true"
+    python_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe)
+        # AQE on: skew splitting and runtime coalescing are wanted at
+        # scale, and in the superstep loop it measured a wash against off
+        # (OPTIMIZATION_r06.md §Engine, item 5)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
@@ -57,13 +60,9 @@ def get_spark(
         # where its size conditions hold — a sort-merge join re-sorts
         # the (cached, already co-partitioned) edge table every
         # superstep, while SHJ builds a hash table over the small
-        # per-partition state side. SPARK_GRAFT_PREFER_SMJ=1 restores
-        # the Spark default for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1"
-            else "false",
-        )
+        # per-partition state side (OPTIMIZATION_r06.md §Engine, item 1)
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.executorEnv.PYTHONPATH", python_path)
     )
     # local mode: shuffle spill through tmpfs when available — local disk
     # does not scale with cores and would cap measured scaling efficiency

@@ -7,6 +7,8 @@ accumulated master.go:285,:407) and per-phase FinishRequest seconds
 (master_service.proto:33-55).
 """
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from drone_spark.algorithms.pagerank import pagerank, pagerank_delta
@@ -82,3 +84,39 @@ def test_traversed_survives_resume(spark, small_edges, tmp_path):
     # re-accounts the resume-point row (from commit meta) plus 4..end
     assert part.edges_traversed_total == sum(b[1 : part.supersteps + 1])
     assert cont.edges_traversed_total == sum(b[part.supersteps :])
+
+
+def test_metric_rows_agree_with_history_at_every_cadence(spark, small_edges, tmp_path):
+    """Per-partition rows (checkpoint_every=1) and the observed global
+    row (checkpoint_every>1) are two granularities of ONE bookkeeping:
+    per superstep, the rows sum to the same vertex and traversed-edge
+    counts, and both match ``RunResult.history``. HITS has no
+    ``traversed_expr``, so this pins the static-bound path: superstep 0
+    records 0, every later superstep exactly ``edges_per_step``."""
+    from drone_spark.algorithms.hits import hits
+
+    per_cadence = {}
+    for every in (1, 4):
+        eng = SuperstepEngine(
+            spark, Catalog(str(tmp_path / f"cat{every}")), num_parts=4,
+            checkpoint_every=every,
+        )
+        res = hits(spark, eng, small_edges, run_id="m_hits", max_supersteps=3)
+        rows = (
+            eng.metrics("m_hits").groupBy("superstep")
+            .agg(F.sum("n_vertices").alias("n"),
+                 F.sum("edges_traversed").alias("e"),
+                 F.max("max_delta").alias("d"))
+            .orderBy("superstep").collect()
+        )
+        assert [r["superstep"] for r in rows] == list(range(res.supersteps + 1))
+        assert rows[0]["e"] == 0
+        for h in res.history:
+            r = rows[h["superstep"]]
+            assert r["e"] == h["edges_traversed"] == 2 * small_edges.count()
+            assert r["d"] == pytest.approx(h["max_delta"], rel=1e-12, abs=0.0)
+        assert res.edges_traversed_total == sum(r["e"] for r in rows)
+        per_cadence[every] = rows
+    a, b = per_cadence[1], per_cadence[4]
+    assert [(r["n"], r["e"]) for r in a] == [(r["n"], r["e"]) for r in b]
+    assert np.allclose([r["d"] for r in a], [r["d"] for r in b], rtol=1e-9, atol=0.0)

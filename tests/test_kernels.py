@@ -12,12 +12,36 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from drone_spark.algorithms.cc import _seeded_fixpoint_kernel
-from drone_spark.algorithms.sssp import _local_dijkstra_kernel
+from drone_spark.algorithms.cc import _seeded_fixpoint_kernel_arrow
+from drone_spark.algorithms.sssp import _local_dijkstra_kernel_arrow
 from drone_spark.graph.csr import LocalCSR, local_components
 from tests.oracles import union_find_components
+
+
+def _arrow_call(kernel, seeds: pd.DataFrame, edges: pd.DataFrame,
+                key=None, cache_token=None) -> pd.DataFrame:
+    """Drive an applyInArrow kernel the way Spark does: Arrow tables in,
+    pyarrow scalars as the group key, an Arrow table out."""
+    if key is not None:
+        key = tuple(pa.scalar(k) for k in key)
+    out = kernel(
+        key,
+        pa.Table.from_pandas(seeds, preserve_index=False),
+        pa.Table.from_pandas(edges, preserve_index=False),
+        cache_token,
+    )
+    return out.to_pandas()
+
+
+def _cc_kernel(key, seeds, edges, cache_token=None):
+    return _arrow_call(_seeded_fixpoint_kernel_arrow, seeds, edges, key, cache_token)
+
+
+def _sssp_kernel(key, seeds, edges, cache_token=None):
+    return _arrow_call(_local_dijkstra_kernel_arrow, seeds, edges, key, cache_token)
 
 
 def _rand_edges(rng, n_vertices: int, n_edges: int) -> tuple[np.ndarray, np.ndarray]:
@@ -46,7 +70,7 @@ def test_cc_kernel_seeded_min_label():
     # two components {0,1,2} and {3,4}; seed only the first with labels
     edges = pd.DataFrame({"src": [0, 1, 3], "dst": [1, 2, 4]})
     seeds = pd.DataFrame({"vid": [2], "label": [7]})
-    out = _seeded_fixpoint_kernel(None, seeds, edges)
+    out = _cc_kernel(None, seeds, edges)
     got = dict(zip(out["vid"], out["label"]))
     # the whole seeded component adopts the min seeded label; the
     # unseeded component emits nothing
@@ -59,7 +83,7 @@ def test_cc_kernel_random_vs_oracle():
     edges = pd.DataFrame({"src": src, "dst": dst})
     verts = np.unique(np.concatenate([src, dst]))
     seeds = pd.DataFrame({"vid": verts, "label": verts})  # seed all: full CC
-    out = _seeded_fixpoint_kernel(None, seeds, edges)
+    out = _cc_kernel(None, seeds, edges)
     got = dict(zip(out["vid"].astype(int), out["label"].astype(int)))
     exp = union_find_components([(int(s), int(d)) for s, d in zip(src, dst)])
     assert got == exp
@@ -71,7 +95,7 @@ def test_sssp_kernel_random_vs_dict_dijkstra():
     w = rng.uniform(0.5, 3.0, 900)
     edges = pd.DataFrame({"src": src, "dst": dst, "weight": w})
     seeds = pd.DataFrame({"vid": [int(src[0]), 299], "dist": [0.0, 1.5]})
-    out = _local_dijkstra_kernel(None, seeds, edges)
+    out = _sssp_kernel(None, seeds, edges)
     got = dict(zip(out["vid"].astype(int), out["dist"]))
 
     # brute-force oracle: plain dict Dijkstra
@@ -105,7 +129,7 @@ def test_sssp_kernel_seed_without_local_edges():
     # still emit its own distance (it may be another vertex's answer)
     edges = pd.DataFrame({"src": [1], "dst": [2]})
     seeds = pd.DataFrame({"vid": [9], "dist": [4.0]})
-    out = _local_dijkstra_kernel(None, seeds, edges)
+    out = _sssp_kernel(None, seeds, edges)
     assert dict(zip(out["vid"], out["dist"])) == {9: 4.0}
 
 
@@ -115,11 +139,11 @@ def test_kernels_contain_no_per_edge_python_loop():
     edge arrays, no dict-based union-find/adjacency build. The only
     sanctioned Python loop is Dijkstra's heap pop (inherent to the
     algorithm; each pop relaxes a whole numpy slice)."""
-    cc_src = inspect.getsource(_seeded_fixpoint_kernel)
+    cc_src = inspect.getsource(_seeded_fixpoint_kernel_arrow)
     assert not re.search(r"for\s+\w+(,\s*\w+)*\s+in\s+zip\(", cc_src)
     assert "setdefault" not in cc_src and "parent[" not in cc_src
 
-    sssp_src = inspect.getsource(_local_dijkstra_kernel)
+    sssp_src = inspect.getsource(_local_dijkstra_kernel_arrow)
     assert "setdefault" not in sssp_src  # no dict adjacency build
     assert "LocalCSR" in sssp_src  # adjacency comes from the CSR helper
     # seed init may zip over the (small) seed set; the edge arrays may not
@@ -176,8 +200,8 @@ def test_cc_kernel_cached_equals_fresh():
         seeds = pd.DataFrame(
             {"vid": verts[step::3], "label": verts[step::3] * 2 + step}
         ).astype("int64")
-        fresh = _seeded_fixpoint_kernel(None, seeds, edges)
-        cached = _seeded_fixpoint_kernel((7,), seeds, edges, cache_token="tok-eq")
+        fresh = _cc_kernel(None, seeds, edges)
+        cached = _cc_kernel((7,), seeds, edges, cache_token="tok-eq")
         f = sorted(zip(fresh["vid"], fresh["label"]))
         c = sorted(zip(cached["vid"], cached["label"]))
         assert f == c

@@ -9,10 +9,11 @@ import heapq
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import example, given, settings, strategies as st
 
-from drone_spark.algorithms.cc import _seeded_fixpoint_kernel
-from drone_spark.algorithms.sssp import _local_dijkstra_kernel
+from drone_spark.algorithms.cc import _seeded_fixpoint_kernel_arrow
+from drone_spark.algorithms.sssp import _local_dijkstra_kernel_arrow
 from drone_spark.graph.csr import LocalCSR, local_components
 from tests.oracles import union_find_components
 
@@ -54,7 +55,9 @@ def test_cc_kernel_emits_min_seed_label_per_seeded_component(edges, seeds):
     spd = pd.DataFrame(
         {"vid": [v for v, _ in seeds], "label": [l for _, l in seeds]}
     ).astype("int64")
-    out = _seeded_fixpoint_kernel(None, spd, epd)
+    out = _seeded_fixpoint_kernel_arrow(
+        None, pa.Table.from_pandas(spd), pa.Table.from_pandas(epd)
+    ).to_pandas()
     got = dict(zip(out["vid"].astype(int), out["label"].astype(int)))
 
     # oracle: brute union-find over edges ∪ seed singletons
@@ -103,7 +106,9 @@ def test_dijkstra_kernel_matches_dict_oracle(edges, seeds):
             "dist": pd.Series([d for _, d in seeds], dtype="float64"),
         }
     )
-    out = _local_dijkstra_kernel(None, spd, epd)
+    out = _local_dijkstra_kernel_arrow(
+        None, pa.Table.from_pandas(spd), pa.Table.from_pandas(epd)
+    ).to_pandas()
     got = dict(zip(out["vid"].astype(int), out["dist"]))
 
     adj: dict[int, list[tuple[int, float]]] = {}

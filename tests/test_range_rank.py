@@ -67,3 +67,21 @@ def test_ntile_closed_form_matches_spark_ntile(spark):
             for r in df.withColumn("t", F.ntile(10).over(w)).collect()
         }
         assert got == want, f"n={n}: {got} != {want}"
+
+
+def test_range_rank_leaves_nothing_in_the_cache(spark):
+    """The range-partitioned copy range_rank ranks over must not stay
+    registered in the session's CacheManager once the result is
+    collected: the same plan, rebuilt here, must not resolve to a
+    cache entry."""
+    df = spark.range(50).select(
+        F.col("id"), (F.col("id") % 7).alias("s")
+    )
+    order = [F.desc("s"), F.asc("id")]
+    ranked = range_rank(df, order, n_parts=4).collect()
+    assert sorted(r["rank"] for r in ranked) == list(range(1, 51))
+    parted = df.repartitionByRange(4, *order).withColumn(
+        "_rr_pid", F.spark_partition_id()
+    )
+    level = parted.storageLevel
+    assert not (level.useMemory or level.useDisk or level.useOffHeap), level

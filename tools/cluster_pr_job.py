@@ -33,36 +33,19 @@ def main() -> None:
     backend = sys.argv[5] if len(sys.argv) > 5 else "relational"
 
     # master/executor topology comes entirely from spark-submit; only
-    # SQL-layer confs are set here, mirroring drone_spark.session.
-    # AQE default mirrors session.py's SPARK_GRAFT_AQE knob: in a
-    # fixed-shape superstep loop AQE's partition coalescing can shrink
-    # a small state shuffle below the executor count — serializing the
-    # reduce stage on the multi-executor side — and its per-stage
-    # re-optimization is pure driver-serial cost. The scaling pair
-    # measures the SAME conf at both sizes either way.
-    import os
-
-    aqe = (
-        "false"
-        if os.environ.get("SPARK_GRAFT_AQE", "1") in ("0", "false")
-        else "true"
-    )
+    # SQL-layer confs are set here, mirroring drone_spark.session (AQE
+    # on, shuffled-hash joins allowed so the per-superstep scatter join
+    # does not re-sort the cached edge table — OPTIMIZATION_r06.md
+    # §Engine, items 1 and 5)
     spark = (
         SparkSession.builder.appName(f"scaling-pr-{backend}")
         .config("spark.sql.shuffle.partitions", str(num_parts))
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # mirror drone_spark.session: allow shuffled-hash join so the
-        # per-superstep scatter join does not re-sort the cached edge
-        # table (guide §3.1); SPARK_GRAFT_PREFER_SMJ=1 restores default
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1"
-            else "false",
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
